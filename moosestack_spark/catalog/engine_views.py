@@ -19,7 +19,7 @@ from __future__ import annotations
 from collections.abc import Sequence
 from typing import Optional
 
-from pyspark.sql import Column, DataFrame, Window
+from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
 
@@ -185,8 +185,3 @@ def versioned_collapsing_resolve(
             *[F.col(c) for c in unord],
         )
     )
-
-
-def aggregate_condition(cond: Column, value: Column) -> Column:
-    """CH `xIf` combinator building block: value where cond else NULL."""
-    return F.when(cond, value)

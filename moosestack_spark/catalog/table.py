@@ -33,6 +33,7 @@ import math
 import os
 import re
 import shutil
+import threading
 from datetime import datetime, timedelta, timezone
 from collections.abc import Iterable, Iterator, Sequence
 from dataclasses import dataclass, field
@@ -64,6 +65,24 @@ from moosestack_spark.datamodel.reflection import to_columns, to_struct_type
 _MANIFEST_RE = re.compile(r"^v\d+\.json$")
 
 T = TypeVar("T", bound=BaseModel)
+
+_APPEND_LOCKS: dict[str, threading.Lock] = {}
+_APPEND_LOCKS_GUARD = threading.Lock()
+
+
+def append_lock(path: str) -> threading.Lock:
+    """The process-wide lock that serializes appends to one directory.
+
+    Spark's file commit protocol stages every append job's output under
+    the destination's single ``_temporary`` directory and deletes it when
+    a job commits, so two concurrent appends to one directory lose each
+    other's acknowledged files.  Every writer that appends to a directory
+    another thread may append to holds this lock around the write (and,
+    for a table, around the snapshot commit that lists its files)."""
+    key = os.path.abspath(path)
+    with _APPEND_LOCKS_GUARD:
+        return _APPEND_LOCKS.setdefault(key, threading.Lock())
+
 
 STREAM_INSERT_BATCH = 1000  # olap_table.py:961
 MAX_INSERT_BLOCK = 100_000  # olap_table.py:736-739
@@ -347,7 +366,8 @@ class OlapTable(Generic[T]):
             # direct-path engine: rows land at the external location
             # (s3a:// on a cluster; any hadoop-fs path locally) in the
             # engine's format (blocks.py:318-347)
-            df.write.mode("append").format(eng.format).save(eng.path)
+            with append_lock(eng.path):
+                df.write.mode("append").format(eng.format).save(eng.path)
             return
         writer = df
         if self.config.order_by_fields:
@@ -370,10 +390,11 @@ class OlapTable(Generic[T]):
             out = out.option(k, v)
         if self.config.partition_by:
             out = out.partitionBy(self.config.partition_by)
-        out.parquet(self.path)
-        if self.config.projections:
-            self._write_projections(df)
-        self._commit_snapshot("append")
+        with append_lock(self.path):
+            out.parquet(self.path)
+            if self.config.projections:
+                self._write_projections(df)
+            self._commit_snapshot("append")
 
     # -- snapshots / time travel --------------------------------------------
     #

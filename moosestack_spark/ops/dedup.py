@@ -22,6 +22,7 @@ Scale design:
 
 from __future__ import annotations
 
+import logging
 import warnings
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -1492,13 +1493,12 @@ def _verify_banded(
         # task's WORK — surface it loudly so the dial (planes/bits per
         # band) gets retuned instead of silently pinning an executor.
         if len(pdf) > 2 * max_bucket_rows:
-            import sys as _sys
-
-            print(
-                f"DEDUP-SKEW-WARNING: verify block holds {len(pdf)} rows "
-                f"(> 2x max_bucket_rows={max_bucket_rows}) — hash-deal "
-                f"skew in a hot bucket; add planes/bits per band",
-                file=_sys.stderr,
+            logging.getLogger(__name__).warning(
+                "DEDUP-SKEW-WARNING: verify block holds %d rows "
+                "(> 2x max_bucket_rows=%d) — hash-deal "
+                "skew in a hot bucket; add planes/bits per band",
+                len(pdf),
+                max_bucket_rows,
             )
         p_blk, q_blk = int(pdf["p"].iat[0]), int(pdf["q"].iat[0])
         blks = pdf["__blk"].to_numpy()

@@ -24,7 +24,7 @@ from pydantic import BaseModel, ValidationError
 from pyspark.sql import DataFrame, SparkSession
 
 from moosestack_spark.catalog.engines import OlapConfig
-from moosestack_spark.catalog.table import InsertOptions, OlapTable
+from moosestack_spark.catalog.table import InsertOptions, OlapTable, append_lock
 from moosestack_spark.streaming.dlq import DLQ_SCHEMA
 from moosestack_spark.streaming.stream import Stream
 
@@ -90,9 +90,7 @@ class IngestPipeline(Generic[T]):
         if ok and self.table is not None:
             self.table.insert(ok, InsertOptions(strategy="fail-fast"))
         if dead and self.dlq_path:
-            self.spark.createDataFrame(dead, DLQ_SCHEMA).write.mode("append").parquet(
-                self.dlq_path
-            )
+            self._append_dlq(dead)
         return {"inserted": len(ok), "dead_lettered": len(dead)}
 
     def dead_letter(
@@ -118,10 +116,13 @@ class IngestPipeline(Generic[T]):
             }
             for rec in records
         ]
-        self.spark.createDataFrame(dead, DLQ_SCHEMA).write.mode("append").parquet(
-            self.dlq_path
-        )
+        self._append_dlq(dead)
         return len(dead)
+
+    def _append_dlq(self, dead: list[dict]) -> None:
+        df = self.spark.createDataFrame(dead, DLQ_SCHEMA)
+        with append_lock(self.dlq_path):
+            df.write.mode("append").parquet(self.dlq_path)
 
     def read_dlq(self) -> DataFrame:
         if not self.dlq_path:

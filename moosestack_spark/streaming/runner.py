@@ -6,9 +6,11 @@ destination topic -> kafka_clickhouse_sync (batch <=100k rows / <=1s flush,
 offsets committed after insert => at-least-once).
 
 Spark mapping: readStream -> foreachBatch(stream.process_batch) -> parquet
-appends per destination + DLQ.  Checkpointing makes delivery exactly-once to
-the idempotent sink — a strict superset of the reference's guarantee.  The
-reference's batching constants (100k rows / 1s flush) correspond to micro-
+appends per destination + DLQ.  Delivery is at-least-once per destination,
+the reference's guarantee: the checkpoint commits a batch only after all of
+its appends, but each destination and each DLQ is its own plain parquet
+append, so a crash between two appends replays the whole batch and
+duplicates the rows already appended.  The reference's batching constants (100k rows / 1s flush) correspond to micro-
 batch trigger sizing here (maxFilesPerTrigger / maxOffsetsPerTrigger).
 """
 

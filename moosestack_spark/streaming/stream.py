@@ -25,9 +25,9 @@ Two transform flavors, mirroring "UDFs are the slow path":
 
 Both run identically over a batch DataFrame or inside
 ``foreachBatch`` of a Structured Streaming query (see runner.py), which is
-how at-least-once (in fact exactly-once-to-idempotent-sink) delivery is
-inherited from Spark checkpointing rather than hand-rolled offset commits
-(kafka auto-commit 5s in runner.ts:44).
+how at-least-once delivery per destination is inherited from Spark
+checkpointing rather than hand-rolled offset commits (kafka auto-commit 5s
+in runner.ts:44): a batch that fails part-way is replayed in full.
 """
 
 from __future__ import annotations

@@ -12,8 +12,11 @@ dropped columns are projected away, and common columns are cast to the
 target type.
 
 Spark mapping: readStream(source) -> conform(target schema) ->
-writeStream(target sink) with a checkpoint — exactly-once to the idempotent
-sink, a strict superset of the reference's at-least-once forwarding.  At
+writeStream(target sink) with a checkpoint.  The parquet sink commits each
+batch to the target's ``_spark_metadata`` log, so Spark readers of the
+target see every batch exactly once; a reader that lists the files itself,
+or a Kafka sink against a live broker, gets the reference's at-least-once
+forwarding (a replayed batch rewrites its rows).  At
 100 TB/day the bridge is a stateless projection: no shuffle, no state store,
 scales with source partitions.
 """

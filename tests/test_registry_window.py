@@ -1,61 +1,78 @@
-"""Registry-window invariants: the driver's correctness gate checks only
-the FIRST 50 registered queries, so _WINDOW_PRIORITY is load-bearing.
-These checks catch the mistakes that would silently waste a round:
-a priority list that isn't exactly 50, names that don't resolve, dupes,
-or an oracled query that has neither a prior green row nor a slot."""
+"""Correctness-window invariants: the correctness gate checks only the
+FIRST 50 gates of ``__spark_entry__.queries()``, so that order is
+load-bearing.  These checks catch the mistakes that would silently waste a
+round: a window that isn't 50 registered unique gates, a CHANGED name that
+does not lead, an oracled gate that has neither a prior green row nor a
+slot, or an order that does not rotate to the oldest evidence next."""
 
 from __future__ import annotations
 
-import json
-import os
-
+import __spark_entry__ as entry
 from moosestack_spark import registry
 
-registry.load_all()
+_WINDOW = 50
 
-_REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-
-
-def _green_from_prior_rounds() -> set[str]:
-    green: set[str] = set()
-    for fname in sorted(os.listdir(_REPO)):
-        if fname.startswith("CORRECTNESS_r") and fname.endswith(".json"):
-            try:
-                data = json.load(open(os.path.join(_REPO, fname)))
-            except Exception:
-                continue
-            green |= {n for n, v in data.items() if isinstance(v, dict) and v.get("hash_match")}
-    return green
+entry._loaded()
 
 
-def test_window_priority_is_exactly_50_registered_unique():
-    prio = registry._WINDOW_PRIORITY
-    assert len(prio) == 50, f"window priority must be exactly 50, got {len(prio)}"
-    assert len(set(prio)) == 50, "duplicate names in window priority"
-    unknown = [n for n in prio if n not in registry.QUERIES]
-    assert not unknown, f"priority names not registered: {unknown}"
+def test_queries_cover_every_registered_gate_once():
+    names = list(entry.queries())
+    assert len(names) == len(set(names)) == len(registry.QUERIES)
+    assert set(names) == set(registry.QUERIES)
 
 
-def test_window_comes_first_in_registry_order():
-    first50 = list(registry.QUERIES)[:50]
-    assert set(first50) == set(registry._WINDOW_PRIORITY)
+def test_window_is_exactly_50_registered_unique():
+    window = list(entry.queries())[:_WINDOW]
+    assert len(window) == _WINDOW, f"window must be exactly 50, got {len(window)}"
+    assert len(set(window)) == _WINDOW, "duplicate names in the window"
+    unknown = [n for n in window if n not in registry.QUERIES]
+    assert not unknown, f"window names not registered: {unknown}"
+    assert len(entry.CHANGED) == len(set(entry.CHANGED)) <= _WINDOW
+    unknown = [n for n in entry.CHANGED if n not in registry.QUERIES]
+    assert not unknown, f"CHANGED names not registered: {unknown}"
+
+
+def test_window_comes_first_changed_then_oldest_evidence():
+    names = list(entry.queries())
+    latest = entry._latest_green()
+    assert names[: len(entry.CHANGED)] == entry.CHANGED
+    rest = names[len(entry.CHANGED) :]
+    oracled = [n for n in rest if n in registry.ORACLES]
+    assert rest[: len(oracled)] == oracled, "rows-only gates must come last"
+    keys = [(latest.get(n, 0), n) for n in oracled]
+    assert keys == sorted(keys), "oracled gates must run oldest evidence first"
 
 
 def test_every_oracled_query_has_green_row_or_window_slot():
-    green = _green_from_prior_rounds()
-    window = set(list(registry.QUERIES)[:50])
-    backlog = set(registry._AFTER_WINDOW)
-    uncovered = [n for n in registry.ORACLES if n not in green and n not in window]
-    assert set(uncovered) <= backlog, (
-        f"oracled queries with no prior green row, no window slot, and no "
-        f"explicit _AFTER_WINDOW backlog entry: {sorted(set(uncovered) - backlog)} "
-        "— rotate them into _WINDOW_PRIORITY (or queue them in _AFTER_WINDOW) "
-        "or they never get checked"
-    )
-    # the backlog must sit immediately after the window so it is the first
-    # thing a wider driver check or next round's rotation picks up
-    after = list(registry.QUERIES)[50 : 50 + len(registry._AFTER_WINDOW)]
-    assert after == registry._AFTER_WINDOW
+    names = list(entry.queries())
+    latest = entry._latest_green()
+    window = set(names[:_WINDOW])
+    uncovered = [n for n in names if n in registry.ORACLES and n not in latest and n not in window]
+    # never-green gates that overflow the window must sit immediately after
+    # it, so they are the first thing the next round's rotation picks up
+    assert names[_WINDOW : _WINDOW + len(uncovered)] == uncovered
+
+
+def test_what_follows_the_window_is_the_next_rotation(monkeypatch):
+    monkeypatch.setattr(entry, "CHANGED", [])
+    latest = entry._latest_green()
+    first = entry._order(latest)
+    next_round = max(latest.values()) + 1
+    after = {**latest, **{n: next_round for n in first[:_WINDOW]}}
+    second = entry._order(after)
+    assert second[:_WINDOW] == first[_WINDOW : 2 * _WINDOW]
+    assert not set(second[:_WINDOW]) & set(first[:_WINDOW])
+
+
+def test_changed_gate_leads_even_when_green_recently(monkeypatch):
+    latest = entry._latest_green()
+    newest = max(latest.values())
+    recent = sorted(n for n in registry.ORACLES if latest.get(n) == newest)[0]
+    monkeypatch.setattr(entry, "CHANGED", [recent])
+    order = entry._order(latest)
+    assert order[0] == recent
+    assert len(order) == len(set(order)) == len(registry.QUERIES)
+    assert list(entry.queries())[0] == recent
 
 
 def test_every_query_callable_and_every_oracle_has_query():
